@@ -90,11 +90,11 @@ object Bench {
     }
   }
 
-  private def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  private[graft] def buildSession(): SparkSession = {
+    val cpus = SparkEntry.envInt("SPARK_GRAFT_CPUS", 32, 1, SparkEntry.MaxCpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       // size file splits to the data: at sf0.1 every table is <= ~10 MB,
@@ -124,7 +124,7 @@ object Bench {
 
   /** Drop state a finished query leaves behind, so the next query's
     * measurement is independent of catalog position. Not timed. */
-  private def resetSession(spark: SparkSession): Unit = {
+  private[graft] def resetSession(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     // unload every loaded state-store provider: each streaming run uses
@@ -148,7 +148,7 @@ object Bench {
     // 250 ms — the cleaner genuinely needs the beat at this reset
     // rate. Env-overridable for heavy-SF sweeps where per-query cost
     // dwarfs the settle.
-    val settle = sys.env.getOrElse("SPARK_GRAFT_RESET_SETTLE_MS", "250").toLong
+    val settle = SparkEntry.envInt("SPARK_GRAFT_RESET_SETTLE_MS", 250, 0, 60000).toLong
     Thread.sleep(settle)
     System.gc()
     Thread.sleep(settle)
@@ -301,10 +301,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val steadyPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
+    val steadyPasses = SparkEntry.envInt("SPARK_GRAFT_BENCH_PASSES", 3, 1, 100)
     // how many of the slowest sweep queries get a dedicated-session
     // re-measurement (0 disables, for quick local sweeps)
-    val isolateSlowest = sys.env.getOrElse("SPARK_GRAFT_ISOLATE_SLOWEST", "10").toInt
+    val isolateSlowest = SparkEntry.envInt("SPARK_GRAFT_ISOLATE_SLOWEST", 10, 0, 1000)
 
     val loadStart = loadAvg()
     val spark = buildSession()

@@ -1,14 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale experiments that need more than a wall-clock number — prints
   * the INTERNAL quantities SCALING.md's mechanism notes cite (candidate
-  * volumes, cell-size distributions), so the "sub-quadratic" claims are
-  * measured, not modeled.
+  * volumes, cell-size distributions, per-pass and per-stage task
+  * metrics), so the "sub-quadratic" claims are measured, not modeled.
+  * Runs in Bench's session with Bench's reset between passes.
   *
-  * Usage: runMain graft.ScaleProbes <probe> <sfDir> [args...]
+  * Usage: runMain graft.ScaleProbes <probe> [args...]
+  *   passes <query> <sfDir> <nPasses> [gate]
+  *                               — one catalog query N times with the
+  *                                 Bench reset between passes: per-pass
+  *                                 wall, exec_run, GC, spill, shuffle,
+  *                                 tmp bytes, JIT, state-store footprint
+  *                                 ("gate" measures the correctness-gate
+  *                                 form instead of a benchFn override)
+  *   stages <query> <sfDir> [gate]
+  *                               — per-stage exec_run / records / bytes
+  *                                 of one steady pass after a cold pass
   *   semdedup <sfDir> <maxCell>  — semDedup cell stats + wall at the cap
   *                                 (maxCell 0 = uncapped)
   *   forecast_floor <sfDir>      — Bayes L1 floor of the n10 forecast
@@ -18,18 +28,13 @@ import org.apache.spark.sql.functions._
   *                                 binomial draws in the future window;
   *                                 its per-group median error is the
   *                                 floor no model can beat
+  *   forecast_mae <sfDir> <layers> <maxIter> <soft|hard>
+  *                               — n10 MLP architecture/protocol sweep:
+  *                                 MAE of raw p and of the L1 rule
   */
 object ScaleProbes {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.files.maxPartitionBytes", (4L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.buildSession()
 
     args.toList match {
       case "passes" :: name :: sfDir :: nPasses :: armRest
@@ -119,12 +124,6 @@ object ScaleProbes {
               }.sum
           }
         }
-        def reset(): Unit = { // Bench.resetSession, replicated
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-          org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-          System.gc(); Thread.sleep(250); System.gc(); Thread.sleep(250)
-        }
         val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
         def codeCacheUsedMb(): Long = {
           import scala.jdk.CollectionConverters._
@@ -133,7 +132,7 @@ object ScaleProbes {
             .map(_.getUsage.getUsed).sum >> 20
         }
         (1 to nPasses.toInt).foreach { p =>
-          reset()
+          Bench.resetSession(spark)
           stateRows.clear(); stateMem.clear()
           val (g0, r0, sm0, sd0, sw0) =
             (gcT.get, runT.get, spillM.get, spillD.get, shufW.get)
@@ -156,45 +155,6 @@ object ScaleProbes {
             f""""codecache_mb":${codeCacheUsedMb()},""" +
             f""""state_rows":$sRows,"state_mem_mb":$sMemMb}""")
         }
-      case "n32delta" :: sfDir :: Nil =>
-        // Pruned-vs-full assembly evidence for n32's changed-keys-only
-        // form (r15 verdict #5): run the full-corpus assembly and the
-        // changedOnly point-read back to back on the SAME staged ingest
-        // and report band-index rows entering each assembly, shuffle
-        // bytes, and walls. The completeness relation itself is
-        // spec-gated (MinhashStreamSpec); this probe is the scale
-        // witness.
-        import graft.queries.StreamingQueries
-        val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-        val cut = docs.agg(coalesce((max(col("doc_id")) + 1) * 3 / 4, lit(0L))
-          .cast("long")).head.getLong(0)
-        val hist = docs.filter(col("doc_id") < cut)
-        val fresh = docs.filter(col("doc_id") >= cut)
-        val dir = graft.sources.TmpDirs.scratch(
-          s"/tmp/graft_n32delta/p${ProcessHandle.current().pid()}")
-        fresh.repartition(8).write.mode("overwrite").parquet(dir)
-        val shufW = new java.util.concurrent.atomic.AtomicLong
-        val shufListener = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null) shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-        spark.sparkContext.addSparkListener(shufListener)
-        Seq(("full", false), ("delta", true), ("full2", false), ("delta2", true))
-          .foreach { case (label, changed) =>
-            val s0 = shufW.get; val t0 = System.nanoTime()
-            val n = StreamingQueries.streamMinhash(spark, fresh, hist, dir,
-              histKey = Some(sfDir), changedOnly = changed, probeScan = true).count()
-            println(f"""[probe] {"probe":"n32delta","sf":"$sfDir","arm":"$label",""" +
-              f""""pairs":$n,"scan_rows":${StreamingQueries.lastAssemblyScanRows},""" +
-              f""""shuffle_write_mb":${(shufW.get - s0) >> 20},""" +
-              f""""wall_sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-          }
-        // repeated probe invocations in one session must not accumulate
-        // listeners (ADVICE r17)
-        spark.sparkContext.removeSparkListener(shufListener)
-
       case "stages" :: name :: sfDir :: armRest
           if armRest.isEmpty || armRest == List("gate") =>
         // Per-STAGE attribution (r17 — guide §1.1/§7.1, the empirical
@@ -228,16 +188,10 @@ object ScaleProbes {
             }
         }
         spark.sparkContext.addSparkListener(stageListener)
-        def reset(): Unit = {
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-          org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-          System.gc(); Thread.sleep(250); System.gc(); Thread.sleep(250)
-        }
         // cold pass (not recorded): JIT + codegen + page cache
         q.benchFn.getOrElse(q.fn)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        reset()
+        Bench.resetSession(spark)
         record = true
         val t0 = System.nanoTime()
         q.benchFn.getOrElse(q.fn)(spark, sfDir)
@@ -255,31 +209,6 @@ object ScaleProbes {
           println(f"""[probe-stage] {"id":${s.id},"exec_sec":${s.execMs / 1e3}%.2f,"gc_sec":${s.gcMs / 1e3}%.2f,"tasks":${s.tasks},"in_rec":${s.inRec},"shr_rec":${s.shrRec},"shw_rec":${s.shwRec},"shr_mb":${s.shrMb}%.1f,"shw_mb":${s.shwMb}%.1f,"name":"${s.name.replace("\"", "'")}"}""")
         }
 
-      case "ivfpqrecall" :: sfDir :: Nil =>
-        // e09 (raw-vector PQ) vs e19 (residual PQ / IVFADC) recall@5
-        // against the exact full probe — the unclamped number behind
-        // e09's 250-milli gate floor (e19's gate is the r14 full-replay
-        // ranked-row oracle; its recall quality is spec-gated on the
-        // 32-cluster planted fixture instead).
-        val emb = Tables.embeddings(spark, sfDir)
-        val index = graft.operators.Similarity.ivfIndexFor(emb, key = sfDir)
-        val queries = emb.filter(col("vec_id") % 20 === 0)
-        val exact = graft.operators.Similarity
-          .probeIvf(index, queries, k = 5, nprobe = index.centers.length)
-          .select("query_id", "neighbor_id").collect()
-          .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-        def recall(label: String, df: org.apache.spark.sql.DataFrame): Unit = {
-          val got = df.select("query_id", "neighbor_id").collect()
-            .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-          val rs = exact.toSeq.map { case (q, t) =>
-            got.getOrElse(q, Set.empty).intersect(t).size / 5.0 }
-          println(f"""[probe] {"probe":"ivfpqrecall","sf":"$sfDir","arm":"$label",""" +
-            f""""queries":${rs.length},"recall_at5":${rs.sum / rs.length}%.4f}""")
-        }
-        recall("raw_e09", graft.operators.Similarity.probeIvfPq(index,
-          graft.operators.Similarity.pqCodebooks(emb), queries, kNn = 5))
-        recall("residual_e19", graft.operators.Similarity.probeIvfPqResidual(index,
-          graft.operators.Similarity.pqCodebooksResidual(index), queries, kNn = 5))
       case "semdedup" :: sfDir :: maxCell :: Nil =>
         val emb = Tables.embeddings(spark, sfDir)
         val t0 = System.nanoTime()
@@ -298,194 +227,6 @@ object ScaleProbes {
         println(f"""[probe] {"probe":"semdedup","sf":"$sfDir","maxCell":$maxCell,""" +
           f""""n":$n,"cells":${stats.getLong(0)},"max_cell":${stats.getLong(1)},""" +
           f""""pair_volume":${stats.getLong(2)},"dropped":$dups,"wall_sec":$wall%.2f}""")
-      case "d08ab" :: sfDir :: Nil =>
-        // d08 pair-aggregate pre-combine experiment (r11 verdict #7): the
-        // 259M-pair (doc_a, doc_b) aggregate is the catalog's heaviest
-        // stage. Three arms over the IDENTICAL df-capped posting table:
-        //   a) current plan — groupBy(doc_a, doc_b).count (codegen hash
-        //      aggregate, partial+final)
-        //   b) packed key — same aggregate on ONE long (doc_a<<32|doc_b):
-        //      smaller shuffle rows, single-column hash
-        //   c) manual bounded pre-combine — mapPartitions LongMap pre-sum
-        //      (flush every 8M input rows) before the packed shuffle, the
-        //      literal "pre-sum within fp-bucket partitions" suggestion
-        // All three must agree exactly (count + checksum asserted).
-        import spark.implicits._
-        import graft.operators.Dedup
-        val docs = Tables.documents(spark, sfDir)
-        val e = Dedup.winnowFingerprints(docs, "doc_id", "text", k = 24, w = 8)
-          .select(col("doc_id"), explode(col("fps")).as("fp")).distinct()
-          .repartition(col("fp"))
-          .transform(graft.ops.Checkpoints.partitioned)
-        val ok = e.groupBy("fp").agg(count(lit(1)).as("df"))
-          .filter(col("df") >= 2 && col("df") <= 64).select("fp")
-        val pruned = e.join(ok, "fp").localCheckpoint(true)
-        val a = pruned.alias("a"); val b = pruned.alias("b")
-        val joined = a.join(b,
-          col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-        def report(arm: String, fn: () => (Long, Long)): Unit = {
-          val t0 = System.nanoTime()
-          val (n, sum) = fn()
-          val wall = (System.nanoTime() - t0) / 1e9
-          println(f"""[probe] {"probe":"d08ab","sf":"$sfDir","arm":"$arm",""" +
-            f""""pairs":$n,"checksum":$sum,"wall_sec":$wall%.2f}""")
-        }
-        def snap(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-          val r = df.agg(count(lit(1)), sum(expr("doc_a * 31 + doc_b * 17 + n_shared")))
-            .collect().head
-          (r.getLong(0), r.getLong(1))
-        }
-        val armA = () => snap(
-          joined.groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-            .agg(count(lit(1)).as("n_shared")).filter(col("n_shared") >= 4))
-        val armB = () => snap(
-          joined.select((shiftleft(col("a.doc_id"), 32)
-              .bitwiseOR(col("b.doc_id"))).as("pk"))
-            .groupBy("pk").agg(count(lit(1)).as("n_shared"))
-            .filter(col("n_shared") >= 4)
-            .select(shiftright(col("pk"), 32).as("doc_a"),
-              col("pk").bitwiseAND(lit(0xffffffffL)).as("doc_b"), col("n_shared")))
-        val armC = () => snap(
-          joined.select((shiftleft(col("a.doc_id"), 32)
-              .bitwiseOR(col("b.doc_id"))).as("pk"))
-            .as[Long]
-            .mapPartitions { it =>
-              new Iterator[(Long, Long)] {
-                private var seg: Iterator[(Long, Long)] = Iterator.empty
-                private def refill(): Unit = {
-                  val m = new scala.collection.mutable.LongMap[Long](1 << 16)
-                  var n = 0
-                  while (it.hasNext && n < 8000000) {
-                    val k = it.next(); m(k) = m.getOrElse(k, 0L) + 1L; n += 1
-                  }
-                  seg = m.iterator
-                }
-                def hasNext: Boolean =
-                  seg.hasNext || (it.hasNext && { refill(); seg.hasNext })
-                def next(): (Long, Long) = { if (!seg.hasNext) refill(); seg.next() }
-              }
-            }
-            .toDF("pk", "c").groupBy("pk").agg(sum("c").as("n_shared"))
-            .filter(col("n_shared") >= 4)
-            .select(shiftright(col("pk"), 32).as("doc_a"),
-              col("pk").bitwiseAND(lit(0xffffffffL)).as("doc_b"), col("n_shared")))
-        // warm-up pass (JIT/page cache), then 3 INTERLEAVED rounds per arm
-        // so session-level drift hits all arms equally; medians are the
-        // comparable numbers
-        armA()
-        for (round <- 1 to 3) {
-          report(s"a_r$round", armA)
-          report(s"b_r$round", armB)
-          report(s"c_r$round", armC)
-        }
-      case "lshrecall" :: sfDir :: Nil =>
-        // Recall cost of the e04 auto-bits law: mean top-5 recall vs
-        // exact brute force for a deterministic query slice, fixed-8-bit
-        // arm vs the occupancy-law arm. Quantifies what the occupancy cut
-        // (e.g. 781 -> 48 candidates/query at sf10) trades away.
-        import graft.functions.VectorFunctions.quantize
-        val emb = Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), quantize(col("embedding")).as("embedding"))
-          .localCheckpoint(true)
-        val n = emb.count()
-        val brute = graft.operators.Similarity
-          .quantizedKnn(emb, col("vec_id") % 100 === 0, 5)
-          .select("query_id", "neighbor_id").collect()
-          .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-        def recall(label: String, dims: Seq[Int]): Unit = {
-          val bits = if (dims.nonEmpty) dims.length
-                     else graft.operators.Similarity.autoLshBits(n, 64)
-          val got = graft.operators.Similarity.lshKnn(emb, k = 5, dims = dims)
-            .filter(col("query_id") % 100 === 0)
-            .select("query_id", "neighbor_id").collect()
-            .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-          val rs = brute.toSeq.map { case (q, exact) =>
-            got.getOrElse(q, Set.empty).intersect(exact).size / 5.0
-          }
-          val mean = if (rs.isEmpty) 0.0 else rs.sum / rs.length
-          println(f"""[probe] {"probe":"lshrecall","sf":"$sfDir","arm":"$label",""" +
-            f""""n":$n,"bits":$bits,"queries":${rs.length},"recall_at5":$mean%.4f}""")
-        }
-        recall("fixed8", Seq(1, 9, 17, 25, 33, 41, 49, 57))
-        recall("auto", Nil)
-        // e18's multi-table OR-construction — the recall lever
-        val bitsM = graft.operators.Similarity.autoLshBits(n, 64)
-        val gotM = graft.operators.Similarity.lshKnnMulti(emb, k = 5)
-          .filter(col("query_id") % 100 === 0)
-          .select("query_id", "neighbor_id").collect()
-          .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-        val rsM = brute.toSeq.map { case (q, exact) =>
-          gotM.getOrElse(q, Set.empty).intersect(exact).size / 5.0
-        }
-        val meanM = if (rsM.isEmpty) 0.0 else rsM.sum / rsM.length
-        println(f"""[probe] {"probe":"lshrecall","sf":"$sfDir","arm":"multi",""" +
-          f""""n":$n,"bits":$bitsM,"queries":${rsM.length},"recall_at5":$meanM%.4f}""")
-      case "lshab" :: sfDir :: Nil =>
-        // e04 auto-bits A/B: the occupancy law (autoLshBits) vs the
-        // historical fixed 8-bit signature, same corpus same session.
-        // Reports wall + the quantity the law controls (bucket occupancy).
-        import graft.functions.VectorFunctions.quantize
-        val emb = Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), quantize(col("embedding")).as("embedding"))
-          .localCheckpoint(true)
-        val n = emb.count()
-        def run(label: String, dims: Seq[Int]): Unit = {
-          val t0 = System.nanoTime()
-          val out = graft.operators.Similarity.lshKnn(emb, k = 5, dims = dims)
-          val rows = out.count()
-          val wall = (System.nanoTime() - t0) / 1e9
-          val bits = if (dims.nonEmpty) dims.length
-                     else graft.operators.Similarity.autoLshBits(n, 64)
-          println(f"""[probe] {"probe":"lshab","sf":"$sfDir","arm":"$label",""" +
-            f""""n":$n,"bits":$bits,"occupancy":${n / (1L << bits)},""" +
-            f""""rows":$rows,"wall_sec":$wall%.2f}""")
-        }
-        run("fixed8", Seq(1, 9, 17, 25, 33, 41, 49, 57))
-        run("auto", Nil)
-        run("fixed8_again", Seq(1, 9, 17, 25, 33, 41, 49, 57))
-        run("auto_again", Nil)
-      case "splitmem" :: nCells :: perCell :: maxCell :: Nil =>
-        // Driver-memory bound of the enforceMaxCell split path: plant
-        // nCells oversized cells of perCell vectors each (3 separable
-        // sub-blobs per cell so Lloyd splits cleanly) and split at
-        // maxCell. Reports what the split actually ships to the driver
-        // (the fitted sub-centroids == the growth of the centers array,
-        // which is driver-resident index metadata by definition) against
-        // what the r11 driver-side sub-fit WOULD have collected (the
-        // per-cell samples), plus the post-split pair volume vs its
-        // n*maxCell linear bound.
-        import spark.implicits._
-        val nc = nCells.toInt; val pc = perCell.toInt; val mc = maxCell.toInt
-        val dim = 16
-        val rnd = new scala.util.Random(97)
-        val rows = (0 until nc).flatMap { c =>
-          val proto = Array.tabulate(dim)(d => ((c * 7 + d * 3) % 101).toDouble * 10.0)
-          (0 until pc).map { j =>
-            val v = proto.clone(); v(0) += (j % 3) * 4.0
-            var d = 0
-            while (d < dim) { v(d) += (rnd.nextDouble() - 0.5) * 0.01; d += 1 }
-            (c.toLong * pc + j, c, v)
-          }
-        }
-        val assigned = rows.toDF("vec_id", "cell", "v").repartition(32)
-          .localCheckpoint(true)
-        val centers = Array.tabulate(nc)(c =>
-          Array.tabulate(dim)(d => ((c * 7 + d * 3) % 101).toDouble * 10.0))
-        val t0 = System.nanoTime()
-        val (refined, grown) = graft.operators.Similarity
-          .enforceMaxCell(assigned, centers, maxCell = mc)
-        val stats = refined.groupBy("cell").agg(count(lit(1)).as("m"))
-          .agg(count(lit(1)).as("cells"), max("m").as("max_cell"),
-            sum(expr("m * m")).as("pair_volume")).collect().head
-        val wall = (System.nanoTime() - t0) / 1e9
-        val n = nc.toLong * pc
-        val centroidBytes = (grown.length - nc).toLong * dim * 8 // what round trips to the driver now
-        val sampleBytes = nc.toLong * math.min(pc, 2048) * dim * 8 // what the r11 path collected in round 1 alone
-        println(f"""[probe] {"probe":"splitmem","cells_planted":$nc,"per_cell":$pc,"maxCell":$mc,""" +
-          f""""n":$n,"cells_out":${stats.getLong(0)},"max_cell_out":${stats.getLong(1)},""" +
-          f""""pair_volume":${stats.getLong(2)},"pair_bound_n_maxCell":${n * mc},""" +
-          f""""driver_bytes_now":$centroidBytes,"driver_bytes_r11_path":$sampleBytes,""" +
-          f""""wall_sec":$wall%.2f}""")
       case "forecast_floor" :: sfDir :: Nil =>
         import org.apache.spark.sql.expressions.Window
         // rebuild the n08-n10 synthetic generative state WITH its latent

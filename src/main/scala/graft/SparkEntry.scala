@@ -42,4 +42,23 @@ object SparkEntry {
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
     name => only.isEmpty || only(name)
   }
+
+  /** Upper bound of SPARK_GRAFT_CPUS: local[N] starts N task threads. */
+  private[graft] val MaxCpus = 1024
+
+  /** A numeric environment override (SPARK_GRAFT_CPUS and the Bench
+    * knobs): `default` when unset, else the value parsed as an integer in
+    * [min, max]. A typo fails here, naming the variable, instead of deep
+    * inside the run (`local[abc]`, a bare NumberFormatException, a
+    * negative sleep).
+    */
+  private[graft] def envInt(name: String, default: Int, min: Int, max: Int,
+      env: String => Option[String] = sys.env.get): Int =
+    env(name) match {
+      case None => default
+      case Some(raw) =>
+        raw.trim.toIntOption.filter(v => v >= min && v <= max).getOrElse(
+          throw new IllegalArgumentException(
+            s"$name must be an integer in [$min, $max], got '$raw'"))
+    }
 }

@@ -626,26 +626,23 @@ object Dedup {
     // within fp partitions" idea — measured 190.9 s median, WORSE than
     // both: the typed Dataset boundary (encode/decode out of Tungsten
     // rows) costs more than the pre-sum saves, and the codegen partial
-    // aggregate was already doing the combining. graft.ScaleProbes d08ab
-    // reproduces all three arms.
-    // Packing is offered to INTEGRAL id columns only: a string-typed
-    // numeric id would aggregate min/max lexicographically (max('50e8',
-    // '9') = '9' passes the range check while the value overflows 32
-    // bits), and a leading-zero id ('007') would round-trip through the
-    // pack as '7' — both silent corruptions the type gate removes. The
-    // range check itself runs cast-BEFORE-aggregate on the CHECKPOINTED
-    // posting table (superset of pruned's ids — conservative), not the
-    // pruned join: aggregating the join here would execute the
-    // df-aggregate and fp-join once for this 1-row collect and AGAIN in
-    // the returned plan.
-    val idType = e.schema(id).dataType
+    // aggregate was already doing the combining.
+    // Packing is offered to INTEGRAL id columns only. The gate reads the
+    // CALLER's id type: the posting table's ids are always long
+    // (winnowFingerprints keys on long), so gating on them would pack a
+    // string id and hand back a long column. Every other id type takes
+    // the two-column plan, and both arms cast the output ids back to the
+    // input type. The range check itself runs cast-BEFORE-aggregate on
+    // the CHECKPOINTED posting table (superset of pruned's ids —
+    // conservative), not the pruned join: aggregating the join here
+    // would execute the df-aggregate and fp-join once for this 1-row
+    // collect and AGAIN in the returned plan.
+    val idType = docs.schema(id).dataType
     val integralId = idType match {
       case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
            org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
       case _ => false
     }
-    // SPARK_GRAFT_D08_TWOCOL=1 forces the fallback arm — the reproducible
-    // handle for the A/B above (bench both arms in one sitting).
     // `idsBounded = true` is the caller's PROMISE that every id already
     // sits in [0, 2³¹) — it skips the 1-row min/max probe job entirely
     // (one fewer scan of the checkpointed posting table per call; the
@@ -655,17 +652,16 @@ object Dedup {
     // matter what the caller promises, so the flag only short-circuits
     // the RANGE probe.
     val packable = integralId &&
-      !sys.env.get("SPARK_GRAFT_D08_TWOCOL").contains("1") &&
       (idsBounded || {
         val idRange = e.agg(min(col(id).cast("long")), max(col(id).cast("long")))
           .collect().head
         !idRange.isNullAt(0) &&
           idRange.getLong(0) >= 0 && idRange.getLong(1) < (1L << 31)
       })
+    // output ids cast back to the INPUT id type so both arms agree on
+    // schema (exact for integral ids in [0, 2^31) by the gate above) —
+    // callers see one column type regardless of which arm ran
     if (packable)
-      // output ids cast back to the INPUT id type so both arms agree on
-      // schema (exact for integral ids in [0, 2^31) by the gate above) —
-      // callers see one column type regardless of which arm ran
       joined
         .select(shiftleft(col(s"a.$id").cast("long"), 32)
           .bitwiseOR(col(s"b.$id").cast("long")).as("pk"))
@@ -679,6 +675,8 @@ object Dedup {
         .groupBy(col(s"a.$id").as("doc_a"), col(s"b.$id").as("doc_b"))
         .agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= minShared)
+        .select(col("doc_a").cast(idType).as("doc_a"), col("doc_b").cast(idType).as("doc_b"),
+          col("n_shared"))
   }
 
   /** Direct n-gram Jaccard near-duplicates via a document-frequency-pruned
@@ -884,28 +882,13 @@ object Dedup {
       text: String = "text",
       spanTokens: Int = 8): DataFrame = {
     val L = spanTokens
-    // A/B arm (r16 verdict #4 — same-sitting sf10 comparisons only):
-    // SPARK_GRAFT_D16=listagg folds the dup detection AND the hit join
-    // into ONE ObjectHashAggregate — partial collect_list ships
-    // per-partition per-gram position lists (hot boilerplate grams
-    // collapse to one row per partition, unique grams pay an array
-    // header), the min!=max dup predicate rides the same aggregate,
-    // survivors explode straight into mergeSpans. Removes the
-    // checkpoint materialization and the semi-join entirely. 100 TB
-    // caveat that keeps this an ARM, not the default: the merged
-    // per-gram list must fit reducer memory, so a mega-hot gram
-    // (boilerplate in ~10M docs) is a skew hazard the streamed
-    // row form does not have.
-    if (sys.env.get("SPARK_GRAFT_D16").contains("listagg")) {
-      val hits = spanOcc(docs, id, text, L)
-        .groupBy("h1", "h2")
-        .agg(collect_list(struct(col("doc_id"), col("pos"))).as("occs"),
-          min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-        .filter(col("mn") =!= col("mx"))
-        .select(explode(col("occs")).as("o"))
-        .select(col("o.doc_id").as("doc_id"), col("o.pos").as("pos"))
-      return mergeSpans(hits, L)
-    }
+    // Rejected alternative (r16 verdict #4, measured at sf10): one
+    // ObjectHashAggregate collect_list of (doc_id, pos) per gram, with the
+    // min!=max dup predicate riding the same aggregate — it removes the
+    // checkpoint and the semi-join, but ran 218-297 s against this form's
+    // 13.5-28.6 s, and its merged per-gram list must fit reducer memory
+    // (a mega-hot boilerplate gram is a skew hazard the streamed row form
+    // does not have).
     val occ = spanOcc(docs, id, text, L)
       // occ feeds BOTH the dup-gram aggregate and the hit join (the
       // d08/q46 multi-consumer class: the scan+tokenize+gram hashing ran
@@ -965,11 +948,6 @@ object Dedup {
 
   private[graft] def spanOcc(docs: DataFrame, id: String = "doc_id",
       text: String = "text", spanTokens: Int = 8): DataFrame = {
-    // A/B instrument (same-sitting comparisons only — the d12 rule):
-    // SPARK_GRAFT_SPANOCC=expr selects the pre-r16 column-expression
-    // kernel (gram-string concat + double xxhash64)
-    if (sys.env.get("SPARK_GRAFT_SPANOCC").contains("expr"))
-      return spanOccExpr(docs, id, text, spanTokens)
     val L = spanTokens
     val spark = docs.sparkSession
     import spark.implicits._
@@ -1023,25 +1001,6 @@ object Dedup {
         }
       }
       .toDF()
-  }
-
-  /** The pre-r16 spanOcc kernel, kept as the A/B counter-arm: gram
-    * strings materialized per position and hashed twice (the measured
-    * sf10 GC-wall allocation class). Selected by
-    * SPARK_GRAFT_SPANOCC=expr; NOT the production path.
-    */
-  private def spanOccExpr(docs: DataFrame, id: String,
-      text: String, spanTokens: Int): DataFrame = {
-    val L = spanTokens
-    docs
-      .select(col(id).as("doc_id"), tokens(col(text)).as("tk"))
-      .filter(size(col("tk")) >= L)
-      .select(col("doc_id"), posexplode(transform(
-        transform(sequence(lit(0), size(col("tk")) - L),
-          i => concat_ws(" ", slice(col("tk"), i + 1, lit(L)))),
-        g => struct(xxhash64(g).as("h1"), xxhash64(lit("d16b"), g).as("h2")))))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"),
-        col("col.h1").as("h1"), col("col.h2").as("h2"))
   }
 
   /** [[dupSpans]]'s merge half, shared with the streaming leg: hit
@@ -1150,13 +1109,11 @@ object Dedup {
     // string, one digest + counter per doc). seg_idx is unique per doc,
     // so sorting by (doc_id, seg_idx) reproduces
     // array_sort(struct(seg_idx, seg)) exactly; concat_ws(" ") never
-    // sees nulls here (seg is an array_join output). The old aggregate
-    // stays behind SPARK_GRAFT_N29=agg as the A/B counter-arm, and the
-    // d18/n29 oracles recompute cleaned_hash independently.
-    val perDoc =
-      if (sys.env.get("SPARK_GRAFT_N29").contains("agg"))
-        reassembleKeptAgg(kept)
-      else reassembleKeptTyped(kept)
+    // sees nulls here (seg is an array_join output). n29's executor time
+    // fell from 28-80 s to 7.6-10.5 s; the old aggregate stays only as
+    // the spec reference ([[reassembleKeptAgg]]), and the d18/n29 oracles
+    // recompute cleaned_hash independently.
+    val perDoc = reassembleKeptTyped(kept)
     val totals = segs.groupBy("doc_id")
       .agg((max(col("seg_idx")) + 1).cast("long").as("n_segments"))
     docIds
@@ -1171,8 +1128,9 @@ object Dedup {
   }
 
   /** [[reassembleSegments]]'s per-doc summary, original aggregate form
-    * (collect_list + array_sort + concat_ws + md5) — the
-    * SPARK_GRAFT_N29=agg A/B counter-arm. */
+    * (collect_list + array_sort + concat_ws + md5) — not a production
+    * path: the reference that pins [[reassembleKeptTyped]] byte for byte
+    * in the specs. */
   private[graft] def reassembleKeptAgg(kept: DataFrame): DataFrame =
     kept.groupBy("doc_id").agg(
       count(lit(1)).cast("long").as("kept_segments"),
@@ -1253,16 +1211,14 @@ object Dedup {
     * per doc. The md5-of-kept-tokens fingerprint is byte-identical to
     * the old `md5(concat_ws(" ", ...))` (the oracle recomputes it
     * independently, so the equivalence is cross-checked at every gated
-    * SF). The old expression kernel stays behind
-    * SPARK_GRAFT_SPANOCC=expr as the A/B counter-arm.
+    * SF). The old expression kernel measured 2-2.7x slower in executor
+    * time at sf10 (SCALING r16) and was dropped.
     */
   def scrubSpans(
       docs: DataFrame,
       spans: DataFrame,
       id: String = "doc_id",
       text: String = "text"): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_SPANOCC").contains("expr"))
-      return scrubSpansExpr(docs, spans, id, text)
     val spark = docs.sparkSession
     import spark.implicits._
     val perDoc = spans
@@ -1327,42 +1283,4 @@ object Dedup {
   private[graft] final case class SpanRange(span_start: Long, span_end: Long)
   private[graft] final case class ScrubOut(doc_id: Long, n_tokens: Long,
       kept_tokens: Long, removed_tokens: Long, cleaned_hash: String)
-
-  /** The pre-r16 scrub kernel (interpreted HOF cut), kept as the A/B
-    * counter-arm under SPARK_GRAFT_SPANOCC=expr. NOT the production
-    * path.
-    */
-  private def scrubSpansExpr(
-      docs: DataFrame,
-      spans: DataFrame,
-      id: String,
-      text: String): DataFrame = {
-    val perDoc = spans
-      .groupBy(col("doc_id"))
-      .agg(collect_list(struct(col("span_start"), col("span_end"))).as("spans"))
-    val noSpans = array().cast("array<struct<span_start:bigint,span_end:bigint>>")
-    docs
-      // coalesce NULL text to '' (as segmentize does) so this arm
-      // agrees with the typed kernel on null-text rows — tokens(NULL)
-      // is NULL and size(NULL) = -1, which would make an A/B over a
-      // null-bearing fixture diff for a reason unrelated to the
-      // kernels under comparison (ADVICE r16)
-      .select(col(id).as("doc_id"),
-        tokens(coalesce(col(text), lit(""))).as("tk"))
-      .join(perDoc, Seq("doc_id"), "left")
-      // keep a token iff no span covers its position; transform's
-      // (element, index) lambda avoids sequence() (whose inferred
-      // negative step on empty docs would yield [0, -1], not [])
-      .withColumn("kept",
-        filter(
-          transform(col("tk"), (t, i) => struct(t.as("tok"), i.cast("long").as("pos"))),
-          s => !exists(coalesce(col("spans"), noSpans),
-            sp => s("pos") >= sp("span_start") && s("pos") <= sp("span_end"))))
-      .select(
-        col("doc_id"),
-        size(col("tk")).cast("long").as("n_tokens"),
-        size(col("kept")).cast("long").as("kept_tokens"),
-        (size(col("tk")) - size(col("kept"))).cast("long").as("removed_tokens"),
-        md5(concat_ws(" ", transform(col("kept"), s => s("tok")))).as("cleaned_hash"))
-  }
 }

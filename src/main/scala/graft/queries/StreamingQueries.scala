@@ -38,7 +38,7 @@ object StreamingQueries {
   private[graft] def lastStreamBatches: Int = lastBatchesTl.get()
 
   /** Band-index rows entering the LAST streamMinhash assembly run ON
-    * THIS THREAD with probeScan=true — spec/probe instrumentation for
+    * THIS THREAD with probeScan=true — spec instrumentation for
     * the changed-keys-only scan-collapse claim (r15 verdict #5). */
   private val lastScanRowsTl: ThreadLocal[Long] = ThreadLocal.withInitial(() => 0L)
   private[graft] def lastAssemblyScanRows: Long = lastScanRowsTl.get()
@@ -1633,19 +1633,14 @@ object StreamingQueries {
     * defaultParallelism (the executor width of THIS session; scales
     * with the deployment instead of hard-coding 32).
     */
-  private def atRestBuckets(src: DataFrame, floorWidth: Boolean = false): Int =
-    sys.env.get("SPARK_GRAFT_ATREST_BUCKETS") match {
-      // A/B counter-arm (same-sitting comparisons, the d12 rule) and a
-      // deployment override
-      case Some(n) => n.toInt
-      case None =>
-        val bytes = src.queryExecution.optimizedPlan.stats.sizeInBytes
-        val floor =
-          if (floorWidth) src.sparkSession.sparkContext.defaultParallelism
-          else 8
-        val target = bytes / (16L * 1024 * 1024)
-        target.min(BigInt(4096)).max(BigInt(floor.max(8))).toInt
-    }
+  private def atRestBuckets(src: DataFrame, floorWidth: Boolean = false): Int = {
+    val bytes = src.queryExecution.optimizedPlan.stats.sizeInBytes
+    val floor =
+      if (floorWidth) src.sparkSession.sparkContext.defaultParallelism
+      else 8
+    val target = bytes / (16L * 1024 * 1024)
+    target.min(BigInt(4096)).max(BigInt(floor.max(8))).toInt
+  }
 
   /** The in-memory catalog doesn't survive process restarts but the
     * warehouse FILES do — a table absent from the catalog whose location

@@ -298,6 +298,38 @@ class DedupSpec extends SparkSpec {
     assert(rows(promised) == rows(probed))
   }
 
+  test("winnowCandidates two-column fallback: wide and string ids give the packed pairs") {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    // only the data selects the fallback: ids outside [0, 2^31) fail the
+    // range probe, a non-integral id type fails the type gate
+    def packs(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.toString.contains("shiftleft")
+    val packedDf = Dedup.winnowCandidates(docs)
+    assert(packs(packedDf))
+    val packed = packedDf.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(packed.nonEmpty, "fixture must yield candidate pairs")
+
+    val off = 1L << 32
+    val wide = Dedup.winnowCandidates(docs.withColumn("doc_id", col("doc_id") + off))
+    assert(!packs(wide))
+    assert(wide.schema("doc_a").dataType == LongType &&
+      wide.schema("doc_b").dataType == LongType)
+    assert(wide.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
+      packed.map { case (a, b, n) => (a + off, b + off, n) })
+
+    // the string order of ids need not agree with the numeric one, so the
+    // pairs compare unordered
+    val str = Dedup.winnowCandidates(
+      docs.withColumn("doc_id", (col("doc_id") + 8).cast("string")))
+    assert(!packs(str))
+    assert(str.schema("doc_a").dataType == StringType &&
+      str.schema("doc_b").dataType == StringType)
+    assert(str.collect()
+      .map(r => (Set(r.getString(0).toLong - 8, r.getString(1).toLong - 8), r.getLong(2)))
+      .toSet == packed.map { case (a, b, n) => (Set(a, b), n) })
+  }
+
   test("typed simhash kernel matches the column expression bit-for-bit") {
     val fast = Dedup.simhashTable(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val colV = docs.select(col("doc_id"),
@@ -870,33 +902,6 @@ class SimilaritySpec extends SparkSpec {
     assert(multi12 >= 0.65, f"e18 4x12 recall@5 $multi12%.3f below the 0.65 floor")
     assert(multi12 - single12 >= 0.25,
       f"multi-table lever dead at depth: 4x12 $multi12%.3f vs 1x12 $single12%.3f")
-  }
-
-  test("lshKnnMulti: kernel form is byte-identical to the pair-join form") {
-    import spark.implicits._
-    // the per-group-kernel arm (the recorded slower counter-example —
-    // Similarity.multiKernel doc) must be EXACT, not approximate: top-k
-    // over the deduped union of per-group top-ks equals top-k over all
-    // candidates under the strict (cos desc, id asc) order, and the
-    // kernel's scalar cosine matches the codegen'd cosine_sim bit for
-    // bit. Quantized fixture (the e18 gate shape) + a float one, both
-    // with a forced hot-bucket salt and forced 12-bit depth.
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .sortBy(t => (t._1, t._3)).toSeq
-    val q = vectors.select(col("vec_id"),
-      graft.functions.VectorFunctions.quantize(col("embedding")).as("embedding"))
-      .localCheckpoint(true)
-    for ((label, df, mb, bpt) <- Seq(
-        ("quantized-default", q, 4096, 0),
-        ("float-12bit", vectors, 4096, 12),
-        ("quantized-salted", q, 20, 0))) {
-      val kernel = rows(Similarity.lshKnnMulti(df, k = 5,
-        maxBucket = mb, bitsPerTable = bpt, pairJoin = false))
-      val pair = rows(Similarity.lshKnnMulti(df, k = 5,
-        maxBucket = mb, bitsPerTable = bpt, pairJoin = true))
-      assert(kernel == pair, s"$label: kernel and pair-join forms diverge")
-    }
   }
 
   test("residual PQ (IVFADC): finer grid than raw PQ on clustered data; recall holds") {
